@@ -89,7 +89,7 @@ class RssSampler:
     """Samples the summed PSS of the process tree on a background thread;
     ``peak_mb`` is the largest sum seen between ``start`` and ``stop``."""
 
-    def __init__(self, interval_s: float = 0.2):
+    def __init__(self, interval_s: float = 0.5):
         self.interval_s = interval_s
         self.peak_mb = 0.0
         self.at_peak: Dict[str, float] = {}

@@ -1,16 +1,18 @@
 """The repository benchmark: one command per workload and seed.
 
-    python3 perfbench/run.py --workload crawl_scrub --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload crawl_scrub --seed 1 --seconds 15 --trace 0
 
 Generates the workload's input from the seed, sets up a Spark session three
-times (setup_s is their median), then calls the program's public entry point
-on all cores for ``--seconds`` (docs_per_s is the median call), checking
-every call's full output against the pure-Python oracle. The last
-line of stdout is the result JSON; the line before it is the report (host
-facts, per-call rates, accuracy). ``--trace 1`` prints the per-layer ledger
-instead (see ledger.py). ``--steady K`` repeats a workload K times in fresh
-processes and prints each end-to-end metric's median, quartiles and spread
-next to its bound. Exits nonzero on any oracle mismatch.
+times (setup_s is their median; each set-up ends with an untimed full-size
+call) and after each set-up calls the program's public entry point on all
+cores for a third of ``--seconds`` (docs_per_s is the median call). Every
+call's full output is checked against the pure-Python oracle once the calls
+are done. The last line of stdout is the result JSON; the line before it is
+the report (host facts, per-call rates, accuracy). ``--trace 1`` prints the
+per-layer ledger instead (see ledger.py). ``--steady K`` repeats a workload
+K times in fresh processes and prints each end-to-end metric's median,
+quartiles and spread next to its bound. Exits nonzero on any oracle
+mismatch.
 """
 
 from __future__ import annotations
@@ -26,6 +28,7 @@ import time
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUPS = 3
+MIN_CALLS = 3
 
 
 def _load_package():
@@ -51,30 +54,38 @@ def _metric(value: float, unit: str) -> dict:
 
 
 def measure(wl, seed: int, seconds: float, size: int, env, host) -> dict:
-    """The untraced run: three set-ups, then wide calls for the window."""
+    """The untraced run: three set-ups, each followed by a third of the
+    timed window, so the window's calls spread over the whole run and a
+    drift in host speed over tens of seconds moves their median less than
+    it moves one contiguous window."""
     import shutil
 
     import harness
     import workloads as W
 
     inp = W.ensure_input(wl, seed, size, env.inputs)
-    warm = W.ensure_input(wl, seed, min(size, W.WARM_N[wl.kind]), env.inputs)
     tally = W.Tally(wl, W.ensure_oracle(wl, inp))
     meter = [harness.host_meter()]
     rss = harness.RssSampler().start()
-    spark, setups, rates = None, [], []
+    spark, setups, rates, timed = None, [], [], 0.0
     try:
         for k in range(SETUPS):
             t0 = time.perf_counter()
             if spark is not None:
                 spark.stop()
             spark = harness.build(env, host["wide_cores"])
-            W.run_once(wl, spark, warm, env.out_dir(f"warm{k}"))
+            # the warm pass is a full-size call: a smaller sample starts
+            # fewer Python workers than a full call runs, and the first full
+            # call after it read ~10% slower than the rest
+            W.run_once(wl, spark, inp, env.out_dir(f"warm{k}"))
             setups.append(time.perf_counter() - t0)
             shutil.rmtree(env.out_dir(f"warm{k}"), ignore_errors=True)
-        t_start = time.perf_counter()
-        while len(rates) < 2 or time.perf_counter() - t_start < seconds:
-            rates.append(tally.call(spark, inp, env.out_dir(f"call{len(rates)}")))
+            last = k == SETUPS - 1
+            while timed < seconds * (k + 1) / SETUPS or (last and len(rates) < MIN_CALLS):
+                t0 = time.perf_counter()
+                rates.append(tally.run(spark, inp, env.out_dir(f"call{len(rates)}")))
+                timed += time.perf_counter() - t0
+        tally.settle()
     except Exception as e:  # the run reports it and is not correct
         tally.errors.append(f"{type(e).__name__}: {e}")
     finally:

@@ -296,9 +296,17 @@ class Tally:
         self.calls = self.attempted = self.failed = 0
         self.counts = {"tp": 0, "fp": 0, "fn": 0, "exact": 0, "scored": 0, "kept": 0}
         self.errors: List[str] = []
+        self.pending: List[Tuple[str, Dict]] = []
 
     def call(self, spark, inp: str, out: str, keep_output: bool = False) -> float:
-        """One timed call; returns records per second. A call that raises
+        """One timed call, checked at once; returns records per second."""
+        rate = self.run(spark, inp, out)
+        self.settle(keep_output)
+        return rate
+
+    def run(self, spark, inp: str, out: str) -> float:
+        """One timed call whose check waits for ``settle``, so a timed window
+        holds calls only; returns records per second. A call that raises
         fails all of its records (the exception propagates)."""
         self.attempted += self.n
         t0, t_epoch = time.perf_counter(), time.time()
@@ -309,16 +317,21 @@ class Tally:
             raise
         dt = time.perf_counter() - t0
         self.last_window_ms = (t_epoch * 1000, dt * 1000)  # (start, length)
-        rate = self.n / dt
-        res = check(self.wl, self.ora, out, counters)
-        if not keep_output:
-            shutil.rmtree(out, ignore_errors=True)
-        self.calls += 1
-        self.failed += res["failed"]
-        self.errors += res["errors"]
-        for k in self.counts:
-            self.counts[k] += res[k]
-        return rate
+        self.pending.append((out, counters))
+        return self.n / dt
+
+    def settle(self, keep_output: bool = False) -> None:
+        """Checks the full output of every call made since the last settle."""
+        for out, counters in self.pending:
+            res = check(self.wl, self.ora, out, counters)
+            if not keep_output:
+                shutil.rmtree(out, ignore_errors=True)
+            self.calls += 1
+            self.failed += res["failed"]
+            self.errors += res["errors"]
+            for k in self.counts:
+                self.counts[k] += res[k]
+        self.pending = []
 
     def accuracy(self) -> Dict[str, object]:
         c = self.counts
