@@ -32,11 +32,12 @@ same add-a-second-stream shape as the reference's ``page.contents_add``
 redactor.py:49-68), /F2 Courier for the base layer. Uncompressed streams +
 a classic xref table, so tests (and humans) can scan the bytes textually.
 
-Declared seams: the grid model is single-page — lines beyond row 60 fall
-below the media box and are clipped (the PLAN's y-coordinates are the
-spec; pagination would fork them); base-layer text is latin-1 with
-non-encodable codepoints replaced by ``?`` (Type1 metrics; labels/conf
-are ASCII by construction).
+Declared seams: the grid model is single-page — lines beyond row 60 run
+into the bottom margin, and from line 65 on fall below the media box and
+are clipped (the PLAN's y-coordinates are the spec; pagination would fork
+them); base-layer text and labels are latin-1 with non-encodable
+codepoints replaced by ``?`` (Type1 metrics — labels carry the user's
+``label_prefix`` and entity-type names, which need not be ASCII).
 """
 
 from __future__ import annotations
@@ -95,7 +96,9 @@ def redaction_stream(plan_rows: Sequence[Dict], draw_labels: bool = True,
                                 text_rgb))
             ops.append(label_op(row["label_x"], row["conf_y"],
                                 row["conf_text"], BLACK))
-    return "".join(ops).encode("ascii")
+    # labels carry the user's label_prefix and entity types from custom
+    # banks: latin-1 like the base layer, unencodable codepoints -> '?'
+    return "".join(ops).encode("latin-1", errors="replace")
 
 
 def base_text_stream(text: str) -> bytes:

@@ -124,3 +124,18 @@ def test_save_redacted_pdfs_streams_and_caps(spark, tmp_path):
     # half-written out_dir masquerading as a complete run, no temp dir
     assert not (tmp_path / "pdfs2").exists()
     assert not (tmp_path / "pdfs2.tmp-partial").exists()
+
+
+def test_non_ascii_label_prefix_renders_latin1():
+    """A user --label-prefix outside ASCII renders like the base layer
+    (latin-1, unencodable codepoints as '?') instead of raising
+    UnicodeEncodeError inside the executor-side render."""
+    from pii_detection_redaction_spark.core.layout import plan_row
+
+    text = "mail bob@x.co now\n"
+    row = dict(plan_row(text, 5, 13, "EMAIL_ADDRESS", 0.85),
+               start=5, end=13, entity_type="EMAIL_ADDRESS")
+    pdf = PW.write_pdf([(text, [row])], label_prefix="PII → § ")
+    redaction = _streams(pdf)[1]
+    assert b"(PII ? \xa7 EMAIL_ADDRESS) Tj ET" in redaction
+    assert b"(conf: 0.85) Tj ET" in redaction
