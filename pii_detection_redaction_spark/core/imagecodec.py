@@ -114,6 +114,8 @@ def render_page_ppm(text: str) -> bytes:
 
 
 def _decode_bmp(data: bytes) -> Tuple[int, int, bytes]:
+    if len(data) < 54:  # 14-byte file header + 40-byte BITMAPINFOHEADER
+        raise ValueError("truncated BMP header")
     magic, _size, _r1, _r2, off = struct.unpack_from("<2sIHHI", data, 0)
     if magic != b"BM":
         raise ValueError("not a BMP")
@@ -124,6 +126,8 @@ def _decode_bmp(data: bytes) -> Tuple[int, int, bytes]:
     flipped = h > 0
     h = abs(h)
     row_len = (w * 3 + 3) & ~3
+    if off + row_len * h > len(data):
+        raise ValueError("truncated BMP raster")
     px = bytearray(w * h)
     for y in range(h):
         src = h - 1 - y if flipped else y

@@ -48,6 +48,16 @@ def test_bmp_bytes_are_structurally_valid():
     assert len(data) == off + row_len * h
 
 
+def test_truncated_bmp_raises_value_error():
+    """A BMP cut short anywhere — inside the headers or inside the raster —
+    raises the declared ValueError, never IndexError / struct.error."""
+    data = IC.render_page_bmp("hello world")
+    for cut in (data[:-10], data[:60], data[:54], data[:40], data[:20],
+                data[:2]):
+        with pytest.raises(ValueError, match="truncated BMP"):
+            IC.decode_image(cut)
+
+
 def test_decode_rejects_unknown_formats():
     with pytest.raises(ValueError, match="unknown image format"):
         IC.decode_image(b"GIF89a....")
