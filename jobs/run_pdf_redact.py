@@ -24,8 +24,23 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
+RENDERING_LIMITS = """\
+rendering limits (core.pdfwrite, core.imagecodec):
+  - one page per document: the text area holds 60 lines; later lines run
+    into the bottom margin, and from line 65 on they fall below the page
+    and are clipped (the redaction plan's coordinates are not paginated).
+  - the base text layer and the labels (including --label-prefix) are
+    latin-1; characters outside latin-1 render as '?'.
+  - the image surface's glyph OCR (BMP/PPM input, not this job's PDFs)
+    reads printable ASCII only; any other character reads back as '?'.
+"""
+
+
 def main() -> None:
-    p = argparse.ArgumentParser()
+    p = argparse.ArgumentParser(
+        epilog=RENDERING_LIMITS,
+        formatter_class=argparse.RawDescriptionHelpFormatter,
+    )
     p.add_argument("--input", required=True, help="pages parquet (url, text)")
     p.add_argument("--output", required=True,
                    help="dir for .pdf files (or parquet path with --parquet)")

@@ -20,8 +20,12 @@ import html as _html
 import re
 from typing import Optional
 
-_P_RE = re.compile(r"<p>(.*?)</p>", re.DOTALL)
-_TAG_RE = re.compile(r"<[^>]+>")
+# pattern sources shared with the JVM mirror (functions.udfs.extract_text_expr)
+P_PATTERN = r"<p>(.*?)</p>"
+TAG_PATTERN = r"<[^>]+>"
+
+_P_RE = re.compile(P_PATTERN, re.DOTALL)
+_TAG_RE = re.compile(TAG_PATTERN)
 
 
 def extract_text(html_bytes: Optional[bytes]) -> str:

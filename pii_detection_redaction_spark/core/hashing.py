@@ -143,10 +143,6 @@ def simhash64(text: str) -> int:
     return out
 
 
-def hamming64(a: int, b: int) -> int:
-    return bin((a ^ b) & U64).count("1")
-
-
 def jaccard_kgrams(a: str, b: str, k: int = 3) -> float:
     sa, sb = set(shingles(a, k)), set(shingles(b, k))
     if not sa and not sb:

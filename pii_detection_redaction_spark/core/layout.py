@@ -131,14 +131,6 @@ def label_is_white(rgb: Tuple[float, float, float]) -> bool:
     return lum < LUMA_WHITE_BELOW
 
 
-def pad_rect(
-    r: Tuple[float, float, float, float], pad: float = RECT_PAD
-) -> Tuple[float, float, float, float]:
-    """reference analyzer.py:97-102 (defined-but-unused helper, API parity)."""
-    x0, y0, x1, y1 = r
-    return (x0 - pad, y0 - pad, x1 + pad, y1 + pad)
-
-
 def plan_row(text: str, start: int, end: int, entity_type: str, score: float) -> dict:
     """The full per-detection plan record — the pure-Python oracle the Spark
     columns and the DuckDB SQL must both reproduce. ``score`` is the

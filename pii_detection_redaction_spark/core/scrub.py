@@ -47,15 +47,10 @@ def select_nonoverlapping(results: Sequence[Detection]) -> List[Detection]:
     return accepted
 
 
-def _splice(text: str, spans: List[tuple]) -> str:
-    # the one shared right-to-left splice (core.spans.splice_spans)
-    return splice_spans(text, spans)
-
-
 def replace_with_labels(text: str, results: Sequence[Detection]) -> str:
     """Each span -> ``<ENTITY_TYPE>`` (reference 'replace' operator)."""
     keep = select_nonoverlapping(results)
-    return _splice(text, [(d.start, d.end, f"<{d.entity_type}>") for d in keep])
+    return splice_spans(text, [(d.start, d.end, f"<{d.entity_type}>") for d in keep])
 
 
 def mask_spans(
@@ -72,7 +67,7 @@ def mask_spans(
         span_text = text[d.start : d.end]
         k = min(len(span_text), chars_to_mask)
         spans.append((d.start, d.end, masking_char * k + span_text[k:]))
-    return _splice(text, spans)
+    return splice_spans(text, spans)
 
 
 def scrub_document(

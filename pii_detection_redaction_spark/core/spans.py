@@ -38,7 +38,7 @@ def splice_spans(text: str, spans) -> str:
     """Right-to-left replacement splice (reference relationships.py:149-153):
     stable reverse sort on start, then sequential surgery — reproduces the
     reference's output even for overlapping spans. The ONE shared spelling
-    for scrub._splice-style callers and relationship masking (two copies of
+    for the scrub operators and relationship masking (two copies of
     replacement-order logic would drift independently)."""
     out = text
     for s, e, rep in sorted(spans, key=lambda p: p[0], reverse=True):

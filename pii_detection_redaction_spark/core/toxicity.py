@@ -106,11 +106,6 @@ def toxicity_spans(text: str) -> List[Tuple[int, int]]:
     return [(m.start(), m.end()) for m in _tox_re.finditer(text)]
 
 
-def toxicity_rule(text: str) -> bool:
-    """True = document passes (at or below the hit threshold)."""
-    return toxicity_hits(text) <= MAX_TOXICITY_HITS
-
-
 def mask_toxicity(text: str) -> str:
     """Replace every lexicon hit with ``TOXIC_MASK``."""
     return _tox_re.sub(TOXIC_MASK, text)

@@ -267,18 +267,6 @@ def mask_toxicity_column(text: Column) -> Column:
     return F.regexp_replace(text, TOXICITY_RE_JVM, TOXIC_MASK)
 
 
-def drop_reasons_column(lang_conf_col: str = "lang_conf", ppl_col: str = "ppl") -> Column:
-    """array<string> of failed rule names + lang_conf/perplexity gates —
-    per-rule lineage (FIXTURES.md §4)."""
-    parts = [
-        F.when(~F.col(f"rule_{name}"), F.lit(name)) for name in Q.RULE_NAMES
-    ]
-    parts.append(F.when(F.col(lang_conf_col) < Q.MIN_LANG_CONF, F.lit("lang_conf")))
-    parts.append(F.when(F.col(ppl_col) > Q.MAX_PERPLEXITY, F.lit("perplexity")))
-    arr = F.array(*parts)
-    return F.filter(arr, lambda x: x.isNotNull())
-
-
 def c4_line_keep_cond(line):
     """JVM keep-predicate for one line under the C4 rules (core.quality
     spec): trimmed non-empty, ends in terminal punctuation, >= min words,

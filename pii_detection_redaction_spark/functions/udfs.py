@@ -51,18 +51,6 @@ LANGID_TYPE = T.StructType(
 )
 
 
-def make_extract_udf():
-    """html:binary -> text:string (byte-identical per url; core.extract).
-    Generic-HTML path (tag-strip fallback). The pipeline hot path uses
-    ``extract_text_expr`` (pure JVM) instead."""
-
-    @pandas_udf(T.StringType())
-    def extract_udf(html: pd.Series) -> pd.Series:
-        return html.map(lambda b: _extract.extract_text(b))
-
-    return extract_udf
-
-
 def extract_text_expr(html_col):
     """JVM-only extraction for ``<p>``-structured page HTML — the exact
     inverse of ``testing.corpus.render_html`` and byte-equal to
@@ -71,11 +59,13 @@ def extract_text_expr(html_col):
     &amp; last). Whole-stage-codegen'd: no Python, no Arrow transfer of the
     ~30 MB/50k-doc html payload."""
     s = F.decode(html_col, "UTF-8")
-    parts = F.regexp_extract_all(s, F.lit("<p>(.*?)</p>"), 1)
+    parts = F.regexp_extract_all(s, F.lit(_extract.P_PATTERN), 1)
     # per-paragraph nested-tag strip BEFORE the join (core.extract order:
     # an unterminated '<' must not eat across the paragraph boundary);
     # no-op on the escaped fixture structure
-    parts = F.transform(parts, lambda x: F.regexp_replace(x, "<[^>]+>", " "))
+    parts = F.transform(
+        parts, lambda x: F.regexp_replace(x, _extract.TAG_PATTERN, " ")
+    )
     joined = F.array_join(parts, "\n")
     unesc = F.replace(
         F.replace(
@@ -546,14 +536,3 @@ def make_quality_scrub_udf(
         )
 
     return quality_scrub_udf
-
-
-def make_token_count_udf(pattern: str = r"[A-Za-z0-9]+(?:'[a-z]+)?|[^\sA-Za-z0-9]"):
-    """BPE-ish token counting: words+contractions or single symbol chars.
-    Vectorized str.count — no per-row Python."""
-
-    @pandas_udf(T.IntegerType())
-    def token_count_udf(texts: pd.Series) -> pd.Series:
-        return texts.fillna("").str.count(pattern).astype("int32")
-
-    return token_count_udf

@@ -43,24 +43,6 @@ OCR_TYPE = T.StructType(
 )
 
 
-def make_ocr_udf():
-    """text (standing in for decoded image pixels — the declared seam) →
-    struct(ocr_text, words). A real deployment swaps the kernel body for
-    ``pytesseract.image_to_data`` over a binary column; the schema,
-    batching, and everything downstream are unchanged."""
-
-    @pandas_udf(OCR_TYPE)
-    def ocr_udf(texts: pd.Series) -> pd.DataFrame:
-        ocr_texts, words = [], []
-        for t in texts:
-            ot, ws = O.ocr_words(t)
-            ocr_texts.append(ot)
-            words.append(ws)
-        return pd.DataFrame({"ocr_text": ocr_texts, "words": words})
-
-    return ocr_udf
-
-
 # fused-UDF output type: OCR struct + detections over the OCR text —
 # ONE definition for both kernels (text stand-in and real-pixel)
 OCR_DETECT_TYPE = T.StructType(

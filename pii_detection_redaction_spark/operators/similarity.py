@@ -78,12 +78,6 @@ def _cosine_from(dot, na, nb):
     return F.when((na > 0.0) & (nb > 0.0), dot / (na * nb))
 
 
-def cosine_sim_col(a, b):
-    """Cosine similarity of two array<float/double> columns, JVM-side;
-    NULL when either norm is zero (see _cosine_from)."""
-    return _cosine_from(_dot(a, b), _norm(a), _norm(b))
-
-
 # Loud-failure bounds on the quadratic arms. These are correctness
 # baselines, not scale paths: past the bound the caller almost certainly
 # reached for the wrong operator, and the job would run for hours (or OOM a

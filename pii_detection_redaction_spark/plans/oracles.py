@@ -149,15 +149,6 @@ GROUP BY l_returnflag, l_linestatus
 ORDER BY l_returnflag, l_linestatus
 """
 
-ORACLE_SQL["top_customers"] = """
-SELECT c_custkey, c_name, round(sum(o_totalprice), 2) AS revenue,
-       count(*) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_custkey, c_name
-ORDER BY revenue DESC, c_custkey
-LIMIT 10
-"""
-
 ORACLE_SQL["region_revenue"] = """
 SELECT r_name,
   round(sum(l_extendedprice * (1 - l_discount)), 2) AS revenue,
@@ -168,18 +159,6 @@ JOIN customer ON o_custkey = c_custkey
 JOIN nation ON c_nationkey = n_nationkey
 JOIN region ON n_regionkey = r_regionkey
 GROUP BY r_name ORDER BY r_name
-"""
-
-ORACLE_SQL["supplier_balance_by_nation"] = """
-SELECT n_name, round(sum(s_acctbal), 2) AS total_acctbal, count(*) AS n_suppliers
-FROM supplier JOIN nation ON s_nationkey = n_nationkey
-GROUP BY n_name ORDER BY n_name
-"""
-
-ORACLE_SQL["customers_without_orders"] = """
-SELECT c_custkey, c_name FROM customer c
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-ORDER BY c_custkey
 """
 
 ORACLE_SQL["order_rank_per_customer"] = """
@@ -270,16 +249,6 @@ WITH daily AS (
 SELECT strftime(day, '%Y-%m-%d') AS day, round(day_rev, 2) AS day_rev,
   round(sum(day_rev) OVER (ORDER BY day_n RANGE BETWEEN 6 PRECEDING AND CURRENT ROW), 2) AS rev7
 FROM daily ORDER BY day
-"""
-
-ORACLE_SQL["nation_coverage"] = """
-WITH c AS (SELECT c_nationkey AS nationkey, count(*) AS n_customers FROM customer GROUP BY 1),
-     s AS (SELECT s_nationkey AS nationkey, count(*) AS n_suppliers FROM supplier GROUP BY 1)
-SELECT coalesce(c.nationkey, s.nationkey) AS nationkey,
-       coalesce(n_customers, 0) AS n_customers,
-       coalesce(n_suppliers, 0) AS n_suppliers
-FROM c FULL OUTER JOIN s ON c.nationkey = s.nationkey
-ORDER BY nationkey
 """
 
 ORACLE_SQL["promo_revenue"] = """
@@ -476,8 +445,6 @@ SELECT doc_id,
 FROM s ORDER BY doc_id
 """
 
-
-ORACLE_SQL["langid_documents"] = _langid_sql()
 
 ORACLE_SQL["doc_fingerprints"] = f"""
 WITH docs AS (
@@ -677,9 +644,6 @@ FROM r WHERE rank <= 5 ORDER BY query_id, rank
 """
 
 
-ORACLE_SQL["embedding_lsh_topk"] = _lsh_topk_sql()
-
-
 def _ivf_topk_sql(n_centroids: int = 16, n_probe: int = 6, k: int = 5) -> str:
     """Oracle for embedding_ivf_topk: centroids are the n lowest-id vectors
     (deterministic pick, similarity._centroids); items assign to their
@@ -739,9 +703,6 @@ sims AS (
 SELECT query_id, vec_id, round(cosine_raw, 6) AS cosine, rank
 FROM r WHERE rank <= {k} ORDER BY query_id, rank
 """
-
-
-ORACLE_SQL["embedding_ivf_topk"] = _ivf_topk_sql()
 
 
 def _severity_rollup_sql() -> str:
@@ -1827,9 +1788,6 @@ ORDER BY doc_id
 """
 
 
-ORACLE_SQL["hash_sample"] = _hash_sample_sql()
-
-
 def _budget_sample_sql() -> str:
     """Full re-derivation of the mixture sample: token totals per language,
     threshold = floor((double(budget)/double(total)) * 16^d) as hex (then
@@ -1871,9 +1829,6 @@ ORDER BY t.doc_id
 """
 
 
-ORACLE_SQL["budget_sample"] = _budget_sample_sql()
-
-
 def _token_shards_sql() -> str:
     """The NAIVE single global window (the plan that cannot scale) — if the
     engine's two-phase bucket prefix sum diverges from it by one token
@@ -1903,8 +1858,6 @@ FROM r ORDER BY doc_id
 
 
 ORACLE_SQL["token_shards"] = _token_shards_sql()
-
-ORACLE_SQL["multimodal_features"] = _multimodal_sql()
 
 # frame sampling × resize geometry: same metadata arithmetic, same fit
 # formula (scale = min(1, 512/w, 512/h); target = max(1, round(dim*scale)))

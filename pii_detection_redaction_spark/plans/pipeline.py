@@ -115,10 +115,10 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     keep-gating happens Python-side — the text now crosses the Arrow
     boundary once, and the JVM no longer materializes a gated third copy.
     Counter-intuitive but measured: hoisting langid to JVM ``regexp_count``
-    columns (functions.langid_expr) was tried and is 2.5x SLOWER than the
-    fused pandas UDF at 16 cores — Java regex case-insensitive alternations
-    lose badly to pandas' C ``str.count`` loop; the Arrow transfer is not
-    the bottleneck at this row width.
+    columns was tried and is 2.5x SLOWER than the fused pandas UDF at 16
+    cores — Java regex case-insensitive alternations lose badly to pandas'
+    C ``str.count`` loop (BENCH.md, "Rejected prototype: language ID as JVM
+    regexp_count columns").
     """
     q_W = None
     if cfg.quality_model is not None:

@@ -141,18 +141,6 @@ def q_region_revenue(spark, sf_dir):
     )
 
 
-def q_supplier_balance_by_nation(spark, sf_dir):
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
-    return (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.round(F.sum("s_acctbal"), 2).alias("total_acctbal"),
-             F.count(F.lit(1)).alias("n_suppliers"))
-        .orderBy("n_name")
-    )
-
-
 def q_customers_without_orders(spark, sf_dir):
     """Anti join (NOT EXISTS)."""
     c = _t(spark, sf_dir, "customer")
@@ -293,30 +281,6 @@ def q_rolling_revenue(spark, sf_dir):
             F.round("rev7", 2).alias("rev7"),
         )
         .orderBy("day")
-    )
-
-
-def q_nation_coverage(spark, sf_dir):
-    """FULL OUTER join: per-nation customer and supplier counts, keeping
-    nations present on either side only."""
-    c = (
-        _t(spark, sf_dir, "customer")
-        .groupBy(F.col("c_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-    s = (
-        _t(spark, sf_dir, "supplier")
-        .groupBy(F.col("s_nationkey").alias("nationkey"))
-        .agg(F.count(F.lit(1)).alias("n_suppliers"))
-    )
-    return (
-        c.join(s, "nationkey", "full_outer")
-        .select(
-            "nationkey",
-            F.coalesce("n_customers", F.lit(0)).alias("n_customers"),
-            F.coalesce("n_suppliers", F.lit(0)).alias("n_suppliers"),
-        )
-        .orderBy("nationkey")
     )
 
 
@@ -473,21 +437,6 @@ def q_doc_quality_agg(spark, sf_dir):
     return out.groupBy("lang").agg(*aggs).orderBy("lang")
 
 
-def q_toxicity_scrub(spark, sf_dir):
-    """Toxicity lexicon stage (north_star "toxicity-scrub") — hit count, the
-    keep/drop rule flag, and the md5 of the masked text, all JVM-side."""
-    d = _t(spark, sf_dir, "documents")
-    hits = F.regexp_count("text", F.lit(TOXICITY_RE_JVM))
-    return d.select(
-        "doc_id",
-        hits.alias("tox_hits"),
-        (hits <= MAX_TOXICITY_HITS).alias("rule_toxicity"),
-        F.md5(F.regexp_replace(F.col("text"), TOXICITY_RE_JVM, TOXIC_MASK)).alias(
-            "masked_md5"
-        ),
-    ).orderBy("doc_id")
-
-
 def q_doc_token_stats(spark, sf_dir):
     """Per-doc text accounting in one row: token/word/char counts (JVM
     regexp_count) joined with the deflate compression-ratio signal
@@ -538,48 +487,6 @@ def q_langid_documents(spark, sf_dir):
     )
 
 
-def q_ftlang_documents(spark, sf_dir):
-    """fastText-architecture language ID (hashed char n-grams scored against
-    a driver-trained, executor-broadcast weight matrix — the north rule's
-    fastText parity path). A trained model is not re-derivable in ANSI SQL,
-    so the value gate is a golden parquet (``testing.goldens.golden_ftlang``)
-    computed by the same ``core.ftlang.predict`` the UDF calls."""
-    d = _t_wide(spark, sf_dir, "documents")
-    ft = make_ftlang_udf(spark)
-    return (
-        d.withColumn("ft", ft(F.col("text")))
-        .select(
-            "doc_id",
-            F.col("ft.lang").alias("ft_lang"),
-            F.round(F.col("ft.prob"), 6).alias("ft_prob"),
-        )
-        .orderBy("doc_id")
-    )
-
-
-def q_ftquality_documents(spark, sf_dir):
-    """fastText-architecture quality classifier (core.ftquality — the
-    DCLM/FineWeb-Edu model-based-filter pattern): hashed char-n-gram NB
-    trained on fluent-vs-junk synthetic supervision, driver-trained,
-    broadcast, Arrow-batch scored. quality_label compares the UNROUNDED
-    probability against the threshold (matching the golden); the prob is
-    rounded 6dp for the value hash. Golden-parquet value gate (a trained
-    matrix is not re-derivable in ANSI SQL)."""
-    from ..core.ftquality import QUALITY_THRESHOLD
-
-    d = _t_wide(spark, sf_dir, "documents")
-    fq = make_ftquality_udf(spark)
-    d = d.withColumn("qp", fq(F.col("text")))
-    return (
-        d.select(
-            "doc_id",
-            F.round(F.col("qp"), 6).alias("quality_prob"),
-            (F.col("qp") >= QUALITY_THRESHOLD).alias("quality_label"),
-        )
-        .orderBy("doc_id")
-    )
-
-
 def q_doc_fingerprints(spark, sf_dir):
     """Per-doc fingerprint family: content md5 + min-shingle-hash fingerprint
     (operators.textstats.fingerprints) plus the 64-bit SimHash (operators.
@@ -610,11 +517,6 @@ def q_exact_dup_keepers(spark, sf_dir):
 def q_minhash_bands(spark, sf_dir):
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 200)
     return D.minhash_band_table(d).orderBy("doc_id", "band_idx")
-
-
-def q_simhash(spark, sf_dir):
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
-    return D.simhash_table(d).orderBy("doc_id")
 
 
 def q_jaccard_consecutive(spark, sf_dir):
@@ -731,30 +633,6 @@ def q_embedding_near_dup(spark, sf_dir):
         SIM.cosine_near_dup_lsh(e, threshold=0.40, dim=64, nbits=4), "lsh"
     )
     return exact.unionByName(lsh).orderBy("method", "id_a", "id_b")
-
-
-def q_embedding_ivf_topk(spark, sf_dir):
-    """IVF approximate top-k (centroid-list probing) — full DuckDB value
-    oracle (deterministic centroid picks replayed as SQL); recall vs brute
-    force is additionally asserted in pytest."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.cosine_topk_ivf(e, q, k=5, n_centroids=16, n_probe=6).orderBy(
-        "query_id", "rank"
-    )
-
-
-def q_embedding_lsh_topk(spark, sf_dir):
-    """LSH-bucketed approximate top-k (the 100-TB path) — full DuckDB value
-    oracle (seeded hyperplanes embedded as SQL literals); recall vs brute
-    force is additionally asserted in pytest."""
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("query_id"), "embedding"
-    )
-    return SIM.cosine_topk_lsh(e, q, dim=64, k=5, nbits=4).orderBy("query_id", "rank")
 
 
 def q_severity_rollup(spark, sf_dir):
@@ -885,47 +763,6 @@ def q_pii_detections(spark, sf_dir):
             F.col("d.pattern_name").alias("pattern_name"),
         )
         .orderBy("url", "start", "end", "entity_type")
-    )
-
-
-def q_pii_entity_counts(spark, sf_dir):
-    d = _pages(spark)
-    detect = make_detect_udf()
-    return (
-        d.select(F.explode(detect(F.col("text"))).alias("d"))
-        .groupBy(F.col("d.entity_type").alias("entity_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("entity_type")
-    )
-
-
-def q_pii_subset_counts(spark, sf_dir):
-    """Per-page per-type detection counts from the PYTHON recognizer bank,
-    restricted to the RE2-expressible subset — the value-level DuckDB gate on
-    the bank itself (the oracle re-counts with the bank's own regex strings
-    over the same parquet). Zero-count groups are absent on both sides."""
-    d = _pages(spark)
-    detect = make_detect_udf(entities=PII_SQL_ENTITIES)
-    return (
-        d.select("url", F.explode(detect(F.col("text"))).alias("d"))
-        .groupBy("url", F.col("d.entity_type").alias("entity_type"))
-        .agg(F.count(F.lit(1)).alias("n"))
-        .orderBy("url", "entity_type")
-    )
-
-
-def q_pii_scrub(spark, sf_dir):
-    d = _t_wide(spark, sf_dir, "documents")
-    detect = make_detect_udf()
-    scrub = make_scrub_udf()
-    return (
-        d.withColumn("detections", detect(F.col("text")))
-        .select(
-            "doc_id",
-            scrub(F.col("text"), F.col("detections")).alias("scrubbed_text"),
-            F.size("detections").alias("n_entities"),
-        )
-        .orderBy("doc_id")
     )
 
 
@@ -1088,19 +925,6 @@ def q_line_dedup_pages(spark, sf_dir):
     return cc.join(c4, "url").orderBy("url")
 
 
-def q_c4_line_dedup(spark, sf_dir):
-    """C4-style keep-first line dedup over the pages corpus (operators.
-    dedup.dedup_lines_keep_first): one surviving copy of every distinct
-    trimmed line corpus-wide, ordered by (url, pos); later repeats removed
-    — including within-document repeats (the arch-3 duplicate-line docs) and
-    cross-document boilerplate (which CC-Net's hot-set strip removes
-    entirely; C4 keeps the first copy — both semantics are in the catalog).
-    Full-SQL DuckDB oracle re-derives the ranking and reassembly."""
-    d = _pages(spark)
-    out = D.dedup_lines_keep_first(d, id_col="url", text_col="text")
-    return out.select("url", "text_clean", "n_lines_removed").orderBy("url")
-
-
 def q_decontaminate(spark, sf_dir):
     """Test-set decontamination over the pages corpus: a deterministic 10%
     eval slice is carved by salted-hash ticket (in production this is an
@@ -1119,30 +943,6 @@ def q_decontaminate(spark, sf_dir):
         text_col="text",
     )
     return out.orderBy("url")
-
-
-def q_doc_compression(spark, sf_dir):
-    """Deflate compression ratio per document (operators.textstats.
-    compression_stats; spec core.quality.compression_ratio). Low = templated
-    text, high = non-language entropy. Not SQL-expressible (codec) —
-    value-gated via the golden-parquet oracle route."""
-    d = _t_wide(spark, sf_dir, "documents")
-    out = TS.compression_stats(d)
-    return out.select(
-        "doc_id",
-        "n_bytes",
-        F.round("compression_ratio", 6).alias("compression_ratio"),
-    ).orderBy("doc_id")
-
-
-def q_doc_repetition_metrics(spark, sf_dir):
-    """Gopher repetition metrics per page (dup-line char fraction, top
-    bi/tri-gram char fraction) — pure JVM higher-order expressions
-    (functions.quality.repetition_metric_columns), spec pinned in
-    core.quality.repetition_metrics; extended metrics, deliberately NOT
-    wired into the frozen keep/drop decision."""
-    d = _pages(spark)
-    return TS.repetition_stats(d, id_col="url").orderBy("url")
 
 
 # host blocklist for the catalog query — literal policy list (a real UT1-
@@ -1166,23 +966,6 @@ def q_host_rollup(spark, sf_dir):
 # per-host page quota for the catalog query — Zipf head of the 20-host pages
 # corpus puts ~6 hosts over this cap, the tail passes untouched
 HOST_CAP = 25
-
-
-def q_c4_line_filter(spark, sf_dir):
-    """C4 line filter (Raffel et al. 2020 §2.2): keep only lines ending in
-    terminal punctuation with >= 3 words and no '{' debris — pure row-local
-    JVM higher-order exprs (functions.quality.c4_filter_lines), zero
-    shuffle/Python. Complements the two line DEDUP operators (CC-Net hot
-    set, C4 keep-first): this one is content-quality, not duplication."""
-    from ..functions.quality import c4_filter_lines
-
-    d = _pages(spark)
-    out = c4_filter_lines(d)
-    return out.select(
-        "url",
-        F.md5("text_clean").alias("clean_md5"),
-        "n_lines_removed",
-    ).orderBy("url")
 
 
 def q_host_quota(spark, sf_dir):
@@ -1308,18 +1091,6 @@ def q_incremental_new(spark, sf_dir):
     )
 
 
-def q_hash_sample(spark, sf_dir):
-    """Deterministic stratified sample of documents (corpus rebalancing:
-    en downsampled to 25%, other languages kept — core.sampling spec): keep
-    iff the md5(salt||doc_id) hex-prefix ticket clears the stratum's
-    threshold. Pure scan-side codegen predicate — zero shuffle, identical
-    keep set on any partitioning / any engine."""
-    from ..operators.sampling import stratified_sample
-
-    d = _t_wide(spark, sf_dir, "documents").select("doc_id", "lang")
-    return stratified_sample(d, "doc_id", "lang").orderBy("doc_id")
-
-
 def q_token_shards(spark, sf_dir):
     """Training-export packing: documents assigned to ~2000-token shards in
     a deterministic md5-ticket order via a DISTRIBUTED prefix sum (range-
@@ -1334,24 +1105,6 @@ def q_token_shards(spark, sf_dir):
         "n_tokens", F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
     ).drop("text")
     return token_shards(d).orderBy("doc_id")
-
-
-def q_budget_sample(spark, sf_dir):
-    """Token-budget mixture sampling (core.sampling.TOKEN_BUDGETS): each
-    language is downsampled to rate budget/total_tokens derived FROM the
-    corpus (en and fr bind, de fits whole, unbudgeted es/zh drop out). One
-    (lang, sum) aggregation, then a zero-shuffle scan-side predicate; the
-    DuckDB oracle re-derives totals, thresholds (floor of double/double division
-    — engine-exact) and the keep set independently."""
-    from ..operators.sampling import token_budget_sample
-    from ..operators.textstats import TOKEN_RE
-
-    d = _t_wide(spark, sf_dir, "documents").select("doc_id", "lang", "text")
-    d = d.withColumn(
-        "n_tokens", F.regexp_count(F.col("text"), F.lit(TOKEN_RE))
-    ).drop("text")
-    out = token_budget_sample(d, "doc_id", "lang", "n_tokens")
-    return out.select("doc_id", "lang", "n_tokens").orderBy("doc_id")
 
 
 def q_ppl_buckets(spark, sf_dir):

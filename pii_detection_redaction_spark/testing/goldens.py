@@ -257,7 +257,8 @@ def _documents_key(sf_dir: str) -> str:
 
 def golden_pii_scrub(sf_dir: str) -> str:
     """(doc_id, scrubbed_text, n_entities) over the documents table —
-    mirrors ``q_pii_scrub`` (detect + relationship scrub, every doc)."""
+    the scrub half of ``q_scrub_documents`` (detect + relationship scrub,
+    every doc)."""
 
     def build() -> pa.Table:
         from ..core.scrub import scrub_document
@@ -281,8 +282,8 @@ def golden_pii_scrub(sf_dir: str) -> str:
 
 def golden_doc_compression(sf_dir: str) -> str:
     """(doc_id, n_bytes, compression_ratio@6dp) over the documents table —
-    mirrors ``q_doc_compression`` (core.quality.compression_ratio; the
-    golden also pins the environment's zlib build output)."""
+    the codec half of ``q_doc_token_stats`` (core.quality.compression_ratio;
+    the golden also pins the environment's zlib build output)."""
 
     def build() -> pa.Table:
         from ..core.quality import compression_ratio
@@ -305,8 +306,8 @@ def golden_doc_compression(sf_dir: str) -> str:
 
 
 def golden_ftlang(sf_dir: str) -> str:
-    """(doc_id, ft_lang, ft_prob@6dp) over the documents table — mirrors
-    ``q_ftlang_documents``: the fastText-architecture classifier
+    """(doc_id, ft_lang, ft_prob@6dp) over the documents table — the
+    fastText half of ``q_langid_documents``: the classifier
     (``core.ftlang.predict``, the same function the Spark UDF scores with,
     under the same trained weight matrix)."""
 
@@ -333,8 +334,9 @@ def golden_ftlang(sf_dir: str) -> str:
 
 def golden_ftquality(sf_dir: str) -> str:
     """(doc_id, quality_prob@6dp, quality_label) over the documents table —
-    mirrors ``q_ftquality_documents`` (``core.ftquality.predict_quality``,
-    the same function the Spark UDF scores with)."""
+    the classifier columns of ``q_doc_quality_flags``
+    (``core.ftquality.predict_quality``, the same function the Spark UDF
+    scores with)."""
 
     def build() -> pa.Table:
         from ..core.ftquality import QUALITY_THRESHOLD, model, predict_quality

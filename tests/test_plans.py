@@ -113,46 +113,6 @@ def test_bin_range_join_is_hash_join(spark, sf001_dir):
     assert "HashJoin" in plan, plan
 
 
-def test_sql_function_registration(spark, pages_small):
-    """spark.sql surface: registered UDFs equal the pure-Python oracle."""
-    from pii_detection_redaction_spark.core import analyze_long_text, scrub_document
-    from pii_detection_redaction_spark.core.toxicity import mask_toxicity
-    from pii_detection_redaction_spark.plans.sqlfuncs import register_sql_functions
-
-    register_sql_functions(spark)
-    spark.read.parquet(pages_small).limit(60).createOrReplaceTempView("pages_v")
-    rows = spark.sql(
-        "SELECT url, text, pii_scrub(text) AS clean, pii_scrub_all(text) AS clean_all,"
-        " size(pii_detect(text)) AS n, langid(text).lang AS lang"
-        " FROM pages_v WHERE length(text) > 0"
-    ).collect()
-    assert rows
-    for r in rows:
-        dets = analyze_long_text(r["text"])
-        expect = scrub_document(r["text"], dets)
-        assert r["clean"] == expect, r["url"]
-        assert r["clean_all"] == mask_toxicity(expect), r["url"]
-        assert r["n"] == len(dets)
-
-
-def test_langid_expr_bit_identical(spark, sf001_dir):
-    """The JVM-expression langid (the SQL-oracle structure) stays
-    bit-identical to the Python oracle, including ties and und/zh paths."""
-    from pii_detection_redaction_spark.core.langid import detect_language
-    from pii_detection_redaction_spark.functions.langid_expr import langid_columns
-    from pii_detection_redaction_spark.testing.corpus import pages_df
-
-    pdf = pages_df(200)
-    sdf = spark.createDataFrame(pdf[["url", "text"]])
-    lang, conf = langid_columns(F.col("text"))
-    got = {
-        r["url"]: (r["l"], r["c"])
-        for r in sdf.select("url", lang.alias("l"), conf.alias("c")).collect()
-    }
-    for _, r in pdf.iterrows():
-        assert got[r.url] == detect_language(r.text), r.url
-
-
 def test_csv_reassembly_single_shuffle_any_width(spark, tmp_path):
     """Wide reassembly is ONE Exchange (groupBy row -> map rebuild) no matter
     how many columns the CSV has — the former per-column join chain was one
