@@ -32,13 +32,14 @@ import json
 import os
 import shutil
 import zipfile
-from typing import Dict, List, Optional, Sequence, Set
+from functools import partial
+from typing import Dict, List, Optional, Sequence
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..core.sanitize import safe_filename
+from ..core.sanitize import claim_filename, safe_filename
 from ..functions.udfs import make_detect_udf, make_scrub_udf
 from ..operators.csvops import cell_detections_long
 from .csv import ROW_FILE, ROW_ID, read_csv, redact_csv, write_csv
@@ -106,21 +107,9 @@ def batch_redact(
 
     artifacts: List[str] = []
     manifest: Dict = {"files": {}, "total_detections": 0}
-    used_names: Set[str] = set()
-
-    def _claim(name: str) -> str:
-        """Collision-safe artifact name: a .csv and a .txt sharing a stem
-        would both emit ``{stem}_detections.json`` — the second claim gets
-        a ``_2`` suffix instead of silently overwriting the first artifact
-        (and double-zipping the same entry name)."""
-        name = safe_filename(name)
-        base, ext = os.path.splitext(name)
-        n, candidate = 1, name
-        while candidate in used_names:
-            n += 1
-            candidate = f"{base}_{n}{ext}"
-        used_names.add(candidate)
-        return candidate
+    # a .csv and a .txt sharing a stem would both emit
+    # {stem}_detections.json: the second claim gets a _2 suffix
+    _claim = partial(claim_filename, used=set())
 
     def _summary(det_rows: List[dict]) -> Dict:
         by_type: Dict[str, int] = {}

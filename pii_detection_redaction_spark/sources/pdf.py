@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..core import pdfwrite as PW
-from ..core.sanitize import safe_filename
+from ..core.sanitize import claim_filename
 
 PLAN_COLS = [
     "start", "end", "entity_type", "value", "x0", "y0", "rect_w", "rect_h",
@@ -91,7 +91,9 @@ def save_redacted_pdfs(
     max_files: Optional[int] = 10_000,
 ) -> int:
     """Stream rendered PDFs to ``{out_dir}/{safe_filename(id)}.pdf`` one at
-    a time (driver holds one file's bytes); returns the file count.
+    a time (driver holds one file's bytes); returns the file count. Ids
+    that sanitize alike get ``_2``, ``_3``, ... suffixes
+    (``core.sanitize.claim_filename``), so no file overwrites another.
     ``max_files`` bounds this export surface the same way the zip sink is
     bounded — corpus-scale output belongs in parquet (the ``rendered``
     frame itself writes as a binary column).
@@ -106,20 +108,19 @@ def save_redacted_pdfs(
     if os.path.exists(tmp):
         shutil.rmtree(tmp)
     os.makedirs(tmp)
-    n = 0
+    used: set = set()
     try:
         for row in rendered.select(id_col, "pdf").toLocalIterator():
-            if max_files is not None and n >= max_files:
+            if max_files is not None and len(used) >= max_files:
                 raise ValueError(
                     f"save_redacted_pdfs passed {max_files} files — this is "
                     f"an operator-sized export; write the DataFrame as "
                     f"parquet for corpus-scale output, or pass "
                     f"max_files=None"
                 )
-            name = safe_filename(f"{row[id_col]}.pdf")
+            name = claim_filename(f"{row[id_col]}.pdf", used)
             with open(os.path.join(tmp, name), "wb") as f:
                 f.write(row["pdf"])
-            n += 1
     except BaseException:
         shutil.rmtree(tmp, ignore_errors=True)
         raise
@@ -127,7 +128,7 @@ def save_redacted_pdfs(
     for name in os.listdir(tmp):
         os.replace(os.path.join(tmp, name), os.path.join(out_dir, name))
     shutil.rmtree(tmp)
-    return n
+    return len(used)
 
 
 __all__ = ["render_redacted_pdfs", "save_redacted_pdfs", "PLAN_COLS"]

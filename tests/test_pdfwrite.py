@@ -126,6 +126,24 @@ def test_save_redacted_pdfs_streams_and_caps(spark, tmp_path):
     assert not (tmp_path / "pdfs2.tmp-partial").exists()
 
 
+def test_save_redacted_pdfs_colliding_names_get_suffixes(spark, tmp_path):
+    """Distinct ids that sanitize to one file name ('/' and '?' both become
+    '_') each keep their own file, suffixed like the batch sink's artifacts,
+    and the returned count equals the files on disk."""
+    rendered = spark.createDataFrame(
+        [("http://a.com/x", b"%PDF-a"), ("http://a.com?x", b"%PDF-b"),
+         ("http://a.com/y", b"%PDF-c")],
+        "url string, pdf binary",
+    ).coalesce(1)
+    out = tmp_path / "pdfs"
+    n = save_redacted_pdfs(rendered, str(out))
+    files = {p.name: p.read_bytes() for p in out.iterdir()}
+    assert n == len(files) == 3
+    assert sorted(files) == ["http___a.com_x.pdf", "http___a.com_x_2.pdf",
+                             "http___a.com_y.pdf"]
+    assert sorted(files.values()) == [b"%PDF-a", b"%PDF-b", b"%PDF-c"]
+
+
 def test_non_ascii_label_prefix_renders_latin1():
     """A user --label-prefix outside ASCII renders like the base layer
     (latin-1, unencodable codepoints as '?') instead of raising
