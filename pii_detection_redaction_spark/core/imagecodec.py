@@ -154,7 +154,7 @@ def _decode_ppm(data: bytes) -> Tuple[int, int, bytes]:
                 pos += 1
             continue
         start = pos
-        while pos < len(data) and data[pos] not in b" \t\r\n\x0b\x0c":
+        while pos < len(data) and data[pos] not in b" \t\r\n\x0b\x0c#":
             pos += 1
         if pos == start:
             raise ValueError("truncated PPM header")
@@ -162,6 +162,10 @@ def _decode_ppm(data: bytes) -> Tuple[int, int, bytes]:
     w, h, maxval = vals
     if maxval != 255:
         raise ValueError("only maxval 255 PPM")
+    if data[pos : pos + 1] == b"#":
+        # the comment hides which byte delimits the raster: refuse, never
+        # decode comment bytes as pixels
+        raise ValueError("comment after PPM maxval")
     pos += 1  # the single whitespace byte terminating the header
     body = data[pos : pos + 3 * w * h]
     if len(body) < 3 * w * h:

@@ -117,6 +117,19 @@ def test_ppm_whitespace_valued_leading_pixels_decode_exactly():
     assert IC.decode_image(data2) == (2, 2, px)
 
 
+def test_ppm_comment_after_maxval_raises_value_error():
+    """A '#' comment between maxval and the raster's delimiter byte leaves
+    the raster start ambiguous: it raises the declared ValueError naming
+    the comment, never decodes comment bytes as pixels. A comment inside
+    an earlier header token still parses."""
+    body = bytes(range(10, 22))
+    for hdr in (b"P6\n2 2\n255# c\n", b"P6\n2 2 255#\n"):
+        with pytest.raises(ValueError, match="comment after PPM maxval"):
+            IC.decode_image(hdr + body)
+    assert IC.decode_image(b"P6\n2#w\n 2\n255\n" + body) == (
+        2, 2, bytes([10, 13, 16, 19]))
+
+
 def test_corrupt_glyph_degrades_to_replacement_not_raise():
     """One flipped pixel must cost one character ('?', ordinary OCR
     lossiness), not abort the decode — inside the pandas UDF a raise
