@@ -2,10 +2,10 @@
 
 Spark-first assembly of the reference's text pipeline (entry point B,
 ``text_detector/cli.py`` → SURVEY.md §3.2) extended with the north-rule
-quality-filter stages. The plan is one narrow pipeline per bucket group —
-parquet scan (column-pruned) → codegen'd quality expressions → Arrow UDFs →
-write — with shuffles only at the explicit url-hash repartition and the
-metrics aggregation.
+quality-filter stages. One call builds one narrow plan — parquet scan
+(column-pruned) → codegen'd quality expressions → Arrow UDFs → write — and
+writes it one bucket group at a time, with shuffles only at the url-hash
+repartition of a coarse scan and the metrics aggregation.
 
 Scale design:
 - url-hash bucketing: ``bucket = pmod(xxhash64(url), num_buckets)`` spreads
@@ -24,9 +24,8 @@ Scale design:
 
 from __future__ import annotations
 
-import os
 from dataclasses import dataclass, field
-from typing import Dict, List, Optional, Sequence
+from typing import Dict, Optional, Sequence
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -145,19 +144,17 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         quality_model=q_W,
     )
 
+    # one withColumns per dependent stage: a withColumn chain re-analyzes the
+    # plan per column (warm 340-370 ms against 230-285 ms, 4-CPU host)
     if cfg.extract_from_html and "html" in df.columns:
         # byte-identical per-url extraction invariant: extracted text IS the
         # canonical text downstream; extract_ok lineage flags divergence from
         # any pre-existing text column. JVM-side inverse of the page
         # structure (functions.udfs.extract_text_expr).
         df = df.withColumn("extracted_text", extract_text_expr(F.col("html")))
-        if "text" in df.columns:
-            df = df.withColumn(
-                "extract_ok", F.col("extracted_text") == F.col("text")
-            ).drop("text")
-        else:
-            df = df.withColumn("extract_ok", F.lit(True))
-        df = df.withColumnRenamed("extracted_text", "text")
+        x = F.col("extracted_text")
+        ok = x == F.col("text") if "text" in df.columns else F.lit(True)
+        df = df.withColumns({"extract_ok": ok, "text": x}).drop("extracted_text")
     else:
         df = df.withColumn("extract_ok", F.lit(True))
 
@@ -169,11 +166,8 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
         from ..operators.dedup import strip_hot_lines_exprs
 
         clean, removed = strip_hot_lines_exprs(F.col("text"), F.col("hot_lines"))
-        df = (
-            df.withColumn("boiler_removed", removed)
-            .withColumn("text", clean)
-            .drop("hot_lines")
-        )
+        df = df.withColumns({"boiler_removed": removed, "text": clean})
+        df = df.drop("hot_lines")
     else:
         df = df.withColumn("boiler_removed", F.lit(0).cast("long"))
 
@@ -184,35 +178,27 @@ def transform_pages(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     from ..functions.quality import quality_metric_columns
     from ..functions.udfs import QUALITY_METRIC_FIELDS
 
-    metrics = quality_metric_columns(F.col("text"))
-    for name, col in metrics.items():
-        df = df.withColumn(name, col)
+    df = df.withColumns(quality_metric_columns(F.col("text")))
     metric_struct = F.struct(*[F.col(f) for f in QUALITY_METRIC_FIELDS])
-
     df = df.withColumn("qs", quality_scrub_udf(F.col("text"), metric_struct))
-    df = (
-        df.withColumn("lang_pred", F.col("qs.lang"))
-        .withColumn("lang_conf", F.col("qs.conf"))
-        .withColumn("ppl", F.col("qs.ppl"))
-        .withColumn("drop_reasons", F.col("qs.drop_reasons"))
-        .withColumn("keep", F.size("qs.drop_reasons") == 0)
-        .withColumn("detections", F.col("qs.detections"))
-        .withColumn(
-            # toxicity-scrub composition (north_star): kept docs get residual
-            # lexicon hits masked AFTER the PII scrub — JVM regexp_replace,
-            # same regex/label as core.toxicity.mask_toxicity. Docs above the
-            # hit threshold never reach here (dropped by rule_toxicity).
-            "scrubbed_text",
-            F.when(
-                F.col("keep"), mask_toxicity_column(F.col("qs.scrubbed_text"))
-            ).otherwise(F.lit(None)),
-        )
-    )
+    keep = F.size("qs.drop_reasons") == 0
+    cols = {
+        "lang_pred": F.col("qs.lang"),
+        "lang_conf": F.col("qs.conf"),
+        "ppl": F.col("qs.ppl"),
+        "drop_reasons": F.col("qs.drop_reasons"),
+        "keep": keep,
+        "detections": F.col("qs.detections"),
+        # toxicity-scrub composition (north_star): kept docs get residual
+        # lexicon hits masked AFTER the PII scrub — JVM regexp_replace,
+        # same regex/label as core.toxicity.mask_toxicity. Docs above the
+        # hit threshold never reach here (dropped by rule_toxicity).
+        "scrubbed_text": F.when(keep, mask_toxicity_column(F.col("qs.scrubbed_text"))),
+    }
     if cfg.quality_classifier:
-        df = df.withColumn("quality_prob", F.col("qs.q_prob"))
-    df = df.drop("qs")
-    df = df.withColumn("n_entities_scrubbed", F.size("detections"))
-    return df
+        cols["quality_prob"] = F.col("qs.q_prob")
+    cols["n_entities_scrubbed"] = F.size("qs.detections")
+    return df.withColumns(cols).drop("qs")
 
 
 OUTPUT_COLUMNS = [
@@ -270,6 +256,43 @@ def host_metrics(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     )
 
 
+_JOB_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel")
+
+
+def pipeline_output(
+    spark: SparkSession, raw: DataFrame, cfg: PipelineConfig
+) -> DataFrame:
+    """The output of one ``run_pipeline`` call over ``raw`` as ONE plan (one
+    UDF factory call, one model broadcast, one analysis), plus the ``grp``
+    column each group's write filters on; Catalyst pushes that filter into
+    the scan, below the Python eval node.
+
+    A scan with fewer partitions than cores leaves cores idle through the
+    whole UDF stage, so it is repartitioned on ``bucket`` (one html+text
+    shuffle; at most buckets-per-group non-empty partitions per group). A
+    scan with at least one partition per core runs as it is, 9 partitions
+    on 8 cores included: every shuffled Python task pays a fixed worker
+    setup, which on ``crawl_scrub`` cost more than the partial last wave
+    (BENCH.md, "One plan per call"). For even waves, size the scan with
+    ``spark.sql.files.maxPartitionBytes`` (what bench.py does).
+    """
+    pages = with_bucket(raw, cfg)
+    n_parts = max(1, cfg.num_buckets // cfg.groups)
+    par = spark.sparkContext.defaultParallelism
+    if raw.rdd.getNumPartitions() < min(n_parts, par):
+        pages = pages.repartition(n_parts, "bucket")
+    if cfg.strip_boilerplate:
+        # corpus-level hot-line set: ONE pass over the whole input, pinned by
+        # localCheckpoint and broadcast into every group
+        hot_arr = boilerplate_hot_lines(raw, cfg).localCheckpoint()
+        pages = pages.crossJoin(F.broadcast(hot_arr))
+    # a quality_model implies the annotation (transform_pages adds it)
+    qp = cfg.quality_classifier or cfg.quality_model is not None
+    out_cols = OUTPUT_COLUMNS + (["quality_prob"] if qp else [])
+    return transform_pages(pages, cfg).select("grp", *out_cols)
+
+
 def run_pipeline(
     spark: SparkSession,
     pages_path: str,
@@ -287,12 +310,6 @@ def run_pipeline(
     prior partial runs when resuming).
     """
     cfg = cfg or PipelineConfig()
-    if cfg.quality_model is not None and not cfg.quality_classifier:
-        # keep the config self-consistent here too (transform_pages also
-        # normalizes): the output-column selection below keys on the flag
-        from dataclasses import replace
-
-        cfg = replace(cfg, quality_classifier=True)
     store = SnapshotStore(out_root)
     done = store.committed_groups() if resume else set()
     if not resume and store.committed_groups():
@@ -323,69 +340,41 @@ def run_pipeline(
         raw = spark.read.parquet(pages_path)
     else:
         raise ValueError(f"unknown input_format {input_format!r}")
-    pages = with_bucket(raw, cfg)
-    # The heavy Arrow-UDF stage needs >= ~2 tasks/core or the run quantizes
-    # into partial waves (measured: a 9-partition scan on 8 cores = 2 waves
-    # with 7 cores idle in wave 2 — it silently cost ~25% of the round-1
-    # scaling efficiency, because Spark's file bin-packing produces as few
-    # as defaultParallelism+1 partitions for a many-small-files corpus).
-    # If the scan's natural split is already fine-grained, skip the exchange
-    # (measured ~7s for 50k docs: row serialization of html+text through the
-    # shuffle); repartition only when the scan is coarser than 2 tasks/core.
-    # Callers who can size the scan itself should prefer
-    # spark.sql.files.maxPartitionBytes ~= input_bytes / (4 * cores)
-    # (shuffle-free — what bench.py does).
-    # n_parts stays <= buckets-per-group (the repartition keys on "bucket",
-    # which cannot yield more non-empty partitions than distinct buckets);
-    # size num_buckets >= groups * 2 * cores for full parallelism.
-    scan_parts = raw.rdd.getNumPartitions()
-    par = spark.sparkContext.defaultParallelism
-    n_parts = max(1, cfg.num_buckets // cfg.groups)
-    need_repartition = scan_parts < min(n_parts, 2 * par)
-
-    # corpus-level hot-line set: ONE pass over the whole input (not per
-    # group), reused by every group via broadcast. localCheckpoint pins the
-    # result so the groups don't recompute the scan+agg lineage.
-    hot_arr = None
-    if cfg.strip_boilerplate:
-        hot_arr = boilerplate_hot_lines(raw, cfg).localCheckpoint()
-
-    for gid in range(cfg.groups):
-        if gid in done:
-            continue
-        obs = Observation(f"grp-{gid}")
-        part = pages.filter(F.col("grp") == gid)
-        if need_repartition:
-            part = part.repartition(n_parts, "bucket")
-        if hot_arr is not None:
-            part = part.crossJoin(F.broadcast(hot_arr))
-        out_cols = OUTPUT_COLUMNS + (
-            ["quality_prob"] if cfg.quality_classifier else []
-        )
-        out = transform_pages(part, cfg).select(*out_cols)
-        out = out.observe(
-            obs,
-            F.count(F.lit(1)).alias("docs_seen"),
-            F.sum(F.col("keep").cast("long")).alias("docs_kept"),
-            F.sum("n_entities_scrubbed").alias("entities_scrubbed"),
-            F.sum((~F.col("extract_ok")).cast("long")).alias("extract_mismatch"),
-            # tox_masked = lexicon hits in the RAW text of kept docs — an
-            # upper bound on tokens actually replaced by <TOXIC>, since a hit
-            # inside a detected PII span is removed by the scrub before
-            # masking. Counting post-scrub would need a second regexp pass
-            # over every kept doc; the bound is documented instead.
-            F.sum(F.when(F.col("keep"), F.col("tox_hits")).otherwise(F.lit(0)))
-            .alias("tox_masked"),
-            F.sum("boiler_removed").alias("lines_removed"),
-        )
-        gpath = store.group_path(gid)
-        # already partitioned by bucket upstream → one file per bucket task;
-        # mode=overwrite keeps retries idempotent.
-        out.write.mode("overwrite").parquet(gpath)
-        counters = {k: int(v or 0) for k, v in obs.get.items()}
-        counters["docs_dropped"] = counters["docs_seen"] - counters["docs_kept"]
-        store.commit([gid], [gpath], counters)
-
+    todo = [gid for gid in range(cfg.groups) if gid not in done]
+    if not todo:
+        return store.counters()
+    whole = pipeline_output(spark, raw, cfg)
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
+    try:
+        for gid in todo:
+            # names the group's jobs in the UI, event log and statusTracker
+            name = f"pipeline grp {gid}/{cfg.groups}"
+            sc.setJobGroup(name, name)
+            obs = Observation(f"grp-{gid}")
+            out = whole.filter(F.col("grp") == gid).drop("grp").observe(
+                obs,
+                F.count(F.lit(1)).alias("docs_seen"),
+                F.sum(F.col("keep").cast("long")).alias("docs_kept"),
+                F.sum("n_entities_scrubbed").alias("entities_scrubbed"),
+                F.sum((~F.col("extract_ok")).cast("long")).alias("extract_mismatch"),
+                # tox_masked = lexicon hits in the RAW text of kept docs: an
+                # upper bound on tokens replaced by <TOXIC> (a hit inside a
+                # scrubbed PII span is gone before masking); counting after
+                # the scrub would cost a second regexp pass per kept doc.
+                F.sum(F.when(F.col("keep"), F.col("tox_hits")).otherwise(F.lit(0)))
+                .alias("tox_masked"),
+                F.sum("boiler_removed").alias("lines_removed"),
+            )
+            gpath = store.group_path(gid)
+            # mode=overwrite keeps retries idempotent
+            out.write.mode("overwrite").parquet(gpath)
+            counters = {k: int(v or 0) for k, v in obs.get.items()}
+            counters["docs_dropped"] = counters["docs_seen"] - counters["docs_kept"]
+            store.commit([gid], [gpath], counters)
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
     return store.counters()
 
 

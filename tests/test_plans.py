@@ -74,6 +74,49 @@ def test_pipeline_core_shuffle_free(spark, pages_small):
     assert simple.count("ArrowEvalPython") == 1, simple
 
 
+def _group_plan(spark, raw, cfg) -> str:
+    """Simple plan of group 0's rows of one run_pipeline call's plan."""
+    from pii_detection_redaction_spark.plans.pipeline import pipeline_output
+
+    df = pipeline_output(spark, raw, cfg).filter(F.col("grp") == 0)
+    return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "simple")
+
+
+def test_pipeline_group_plan_filters_in_scan_below_python(spark, pages_small):
+    """A group's rows come from the ONE per-call plan: exactly one
+    ArrowEvalPython, and the group predicate sits in the FileScan's
+    DataFilters below it (a group reads only its own rows)."""
+    cfg = PipelineConfig(num_buckets=16, groups=4)
+    lines = _group_plan(spark, spark.read.parquet(pages_small), cfg).splitlines()
+    arrow = [i for i, l in enumerate(lines) if "ArrowEvalPython" in l]
+    assert len(arrow) == 1, lines
+    scan = next(i for i, l in enumerate(lines) if "FileScan" in l)
+    data_filters = lines[scan].split("DataFilters: [")[1].split("], Format")[0]
+    assert "xxhash64(url" in data_filters and "% 4) = 0" in data_filters, lines[scan]
+    assert scan > arrow[0]
+
+
+def test_pipeline_repartitions_only_below_one_partition_per_core(
+    spark, pages_small, tmp_path
+):
+    """No Exchange when the scan has at least one partition per core, even
+    below two per core; exactly one hashpartitioning(bucket) Exchange when
+    it has fewer."""
+    from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
+
+    cores = spark.sparkContext.defaultParallelism
+    cfg = PipelineConfig(num_buckets=16 * cores, groups=4)  # 4 buckets/core
+    coarse = spark.read.parquet(pages_small)
+    assert coarse.rdd.getNumPartitions() < cores
+    plan = _group_plan(spark, coarse, cfg)
+    assert plan.count("Exchange") == 1, plan
+    assert plan.count("Exchange hashpartitioning(bucket#") == 1, plan
+    path = write_pages_parquet(str(tmp_path / "p"), 64, n_files=cores)
+    fine = spark.read.parquet(path)
+    assert cores <= fine.rdd.getNumPartitions() < 2 * cores
+    assert "Exchange" not in _group_plan(spark, fine, cfg)
+
+
 def test_asof_join_single_core_shuffle(spark, sf001_dir):
     """The as-of operator itself costs exactly one Exchange (the window's
     partitionBy(key)) — no nested-loop join, no range explosion."""

@@ -146,6 +146,40 @@ def test_resume_after_partial_commit(spark, pages_small, tmp_path):
     assert read_output(spark, out).count() == full_rows
 
 
+def test_one_plan_per_call_and_named_group_jobs(spark, tmp_path, monkeypatch):
+    """For any number of groups, one run_pipeline call builds the fused UDF
+    once; each group's Spark jobs run under the job group "pipeline grp G/N";
+    the caller's job group is restored afterwards."""
+    from pii_detection_redaction_spark.plans import pipeline as P
+    from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
+
+    src = str(tmp_path / "pages")
+    write_pages_parquet(src, 60)
+    made = []
+    real = P.make_quality_scrub_udf
+    monkeypatch.setattr(
+        P, "make_quality_scrub_udf", lambda *a, **k: made.append(1) or real(*a, **k)
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("caller", "caller's jobs")
+    try:
+        for groups in (1, 3):
+            made.clear()
+            cfg = PipelineConfig(num_buckets=12, groups=groups)
+            c = run_pipeline(spark, src, str(tmp_path / f"out{groups}"), cfg)
+            assert c["docs_seen"] == 60
+            assert len(made) == 1, groups
+        tracker = sc.statusTracker()
+        jobs = [set(tracker.getJobIdsForGroup(f"pipeline grp {g}/3")) for g in range(3)]
+        assert all(jobs), jobs
+        assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
+        assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+    finally:
+        for k in ("spark.jobGroup.id", "spark.job.description",
+                  "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(k, None)
+
+
 def test_dedup_pass_removes_planted_duplicates(spark, tmp_path):
     """scrub -> dedup second pass: planted cross-bucket exact duplicates are
     removed, keeper is the smallest url, non-duplicates untouched."""
