@@ -268,13 +268,11 @@ def pipeline_output(
     column each group's write filters on; Catalyst pushes that filter into
     the scan, below the Python eval node.
 
-    A scan with fewer partitions than cores leaves cores idle through the
-    whole UDF stage, so it is repartitioned on ``bucket`` (one html+text
-    shuffle; at most buckets-per-group non-empty partitions per group). A
-    scan with at least one partition per core runs as it is, 9 partitions
-    on 8 cores included: every shuffled Python task pays a fixed worker
-    setup, which on ``crawl_scrub`` cost more than the partial last wave
-    (BENCH.md, "One plan per call"). For even waves, size the scan with
+    Only a scan with fewer partitions than cores, which leaves cores idle
+    through the whole UDF stage, is repartitioned on ``bucket``. A partial
+    last wave runs as it is: on 5 scan partitions on 4 cores, skipping the
+    shuffle had the higher median docs/s up to 12,800 pages per call
+    (BENCH.md, "Partial last wave"). For even waves, size the scan with
     ``spark.sql.files.maxPartitionBytes`` (what bench.py does).
     """
     pages = with_bucket(raw, cfg)
@@ -308,6 +306,9 @@ def run_pipeline(
 
     Returns the accumulated counters across all snapshots (including any from
     prior partial runs when resuming).
+
+    Each group's Spark jobs run under the job group ``pipeline grp G/N``,
+    or keep the caller's job group and carry that name as description.
     """
     cfg = cfg or PipelineConfig()
     store = SnapshotStore(out_root)
@@ -348,9 +349,13 @@ def run_pipeline(
     saved = {k: sc.getLocalProperty(k) for k in _JOB_GROUP_PROPS}
     try:
         for gid in todo:
-            # names the group's jobs in the UI, event log and statusTracker
+            # names the group's jobs in the UI, event log and statusTracker;
+            # a caller's own job group is kept, so cancelJobGroup still works
             name = f"pipeline grp {gid}/{cfg.groups}"
-            sc.setJobGroup(name, name)
+            if saved["spark.jobGroup.id"] is None:
+                sc.setJobGroup(name, name)
+            else:
+                sc.setJobDescription(name)
             obs = Observation(f"grp-{gid}")
             out = whole.filter(F.col("grp") == gid).drop("grp").observe(
                 obs,

@@ -99,9 +99,9 @@ def test_pipeline_group_plan_filters_in_scan_below_python(spark, pages_small):
 def test_pipeline_repartitions_only_below_one_partition_per_core(
     spark, pages_small, tmp_path
 ):
-    """No Exchange when the scan has at least one partition per core, even
-    below two per core; exactly one hashpartitioning(bucket) Exchange when
-    it has fewer."""
+    """No Exchange when the scan has at least one partition per core, a
+    partial last wave (cores + 1) included; exactly one
+    hashpartitioning(bucket) Exchange when it has fewer."""
     from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
 
     cores = spark.sparkContext.defaultParallelism
@@ -111,10 +111,18 @@ def test_pipeline_repartitions_only_below_one_partition_per_core(
     plan = _group_plan(spark, coarse, cfg)
     assert plan.count("Exchange") == 1, plan
     assert plan.count("Exchange hashpartitioning(bucket#") == 1, plan
-    path = write_pages_parquet(str(tmp_path / "p"), 64, n_files=cores)
-    fine = spark.read.parquet(path)
-    assert cores <= fine.rdd.getNumPartitions() < 2 * cores
-    assert "Exchange" not in _group_plan(spark, fine, cfg)
+    # an open cost above maxPartitionBytes packs one file per partition
+    spark.conf.set("spark.sql.files.openCostInBytes", "1g")
+    try:
+        for n_files in (cores, cores + 1):
+            path = write_pages_parquet(
+                str(tmp_path / f"p{n_files}"), 8 * n_files, n_files=n_files
+            )
+            fine = spark.read.parquet(path)
+            assert fine.rdd.getNumPartitions() == n_files
+            assert "Exchange" not in _group_plan(spark, fine, cfg)
+    finally:
+        spark.conf.unset("spark.sql.files.openCostInBytes")
 
 
 def test_asof_join_single_core_shuffle(spark, sf001_dir):

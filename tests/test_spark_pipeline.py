@@ -148,8 +148,9 @@ def test_resume_after_partial_commit(spark, pages_small, tmp_path):
 
 def test_one_plan_per_call_and_named_group_jobs(spark, tmp_path, monkeypatch):
     """For any number of groups, one run_pipeline call builds the fused UDF
-    once; each group's Spark jobs run under the job group "pipeline grp G/N";
-    the caller's job group is restored afterwards."""
+    once; each group's Spark jobs run under the job group "pipeline grp G/N".
+    A caller's own job group is kept for those jobs (so cancelJobGroup
+    reaches them) and its properties are restored afterwards."""
     from pii_detection_redaction_spark.plans import pipeline as P
     from pii_detection_redaction_spark.testing.corpus import write_pages_parquet
 
@@ -161,7 +162,9 @@ def test_one_plan_per_call_and_named_group_jobs(spark, tmp_path, monkeypatch):
         P, "make_quality_scrub_udf", lambda *a, **k: made.append(1) or real(*a, **k)
     )
     sc = spark.sparkContext
-    sc.setJobGroup("caller", "caller's jobs")
+    tracker = sc.statusTracker()
+    props = ("spark.jobGroup.id", "spark.job.description",
+             "spark.job.interruptOnCancel")
     try:
         for groups in (1, 3):
             made.clear()
@@ -169,14 +172,22 @@ def test_one_plan_per_call_and_named_group_jobs(spark, tmp_path, monkeypatch):
             c = run_pipeline(spark, src, str(tmp_path / f"out{groups}"), cfg)
             assert c["docs_seen"] == 60
             assert len(made) == 1, groups
-        tracker = sc.statusTracker()
         jobs = [set(tracker.getJobIdsForGroup(f"pipeline grp {g}/3")) for g in range(3)]
         assert all(jobs), jobs
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+
+        sc.setJobGroup("caller", "caller's jobs", interruptOnCancel=True)
+        before = set(tracker.getJobIdsForGroup("caller"))
+        cfg = PipelineConfig(num_buckets=12, groups=2)
+        c = run_pipeline(spark, src, str(tmp_path / "out_caller"), cfg)
+        assert c["docs_seen"] == 60
+        assert set(tracker.getJobIdsForGroup("caller")) - before
+        assert not tracker.getJobIdsForGroup("pipeline grp 0/2")
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller"
         assert sc.getLocalProperty("spark.job.description") == "caller's jobs"
+        assert sc.getLocalProperty("spark.job.interruptOnCancel") == "true"
     finally:
-        for k in ("spark.jobGroup.id", "spark.job.description",
-                  "spark.job.interruptOnCancel"):
+        for k in props:
             sc.setLocalProperty(k, None)
 
 
