@@ -25,6 +25,7 @@ unscrubbed. Fixtures pin this choice.
 
 from __future__ import annotations
 
+from bisect import bisect_left, insort
 from typing import List, Sequence
 
 from .relationships import mask_with_relationships
@@ -38,11 +39,17 @@ def select_nonoverlapping(results: Sequence[Detection]) -> List[Detection]:
         results, key=lambda d: (-d.score, d.start, d.end, d.entity_type)
     )
     accepted: List[Detection] = []
+    # accepted (start, end) pairs in order: pairwise non-overlapping, so
+    # their ends are non-decreasing too, and the only one that can overlap
+    # a candidate is the last pair starting before the candidate ends
+    bounds: List[tuple] = []
     for d in ordered:
         # score-first greedy (presidio _remove_conflicts semantics): a span
         # is dropped only when a HIGHER-priority span overlaps it
-        if all(not (d.start < a.end and a.start < d.end) for a in accepted):
+        i = bisect_left(bounds, (d.end,))
+        if i == 0 or bounds[i - 1][1] <= d.start:
             accepted.append(d)
+            insort(bounds, (d.start, d.end))
     accepted.sort(key=lambda d: d.start)
     return accepted
 

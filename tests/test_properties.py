@@ -37,6 +37,37 @@ def test_selected_spans_never_overlap(text):
         assert a.end <= b.start
 
 
+def _select_quadratic(results):
+    """The score-first greedy as first written: probe every accepted span."""
+    ordered = sorted(results, key=lambda d: (-d.score, d.start, d.end, d.entity_type))
+    accepted = []
+    for d in ordered:
+        if all(not (d.start < a.end and a.start < d.end) for a in accepted):
+            accepted.append(d)
+    accepted.sort(key=lambda d: d.start)
+    return accepted
+
+
+# small coordinates and few scores/types force ties, shared starts and
+# zero-width spans (width 0 is drawn as often as any other width)
+_span_sets = st.lists(
+    st.builds(
+        lambda t, s, w, sc: Detection(t, s, s + w, sc),
+        st.sampled_from("ABC"),
+        st.integers(0, 30),
+        st.integers(0, 6),
+        st.sampled_from([0.3, 0.5, 0.5, 0.85, 1.0]),
+    ),
+    max_size=40,
+)
+
+
+@given(_span_sets)
+@settings(max_examples=400, deadline=None)
+def test_select_nonoverlapping_equals_quadratic_probe(dets):
+    assert select_nonoverlapping(dets) == _select_quadratic(dets)
+
+
 @given(_texts)
 @settings(max_examples=60, deadline=None)
 def test_scrub_deterministic_and_removes_values(text):
